@@ -226,8 +226,7 @@ def wcc(
             if changed == 0:
                 break
         # the count above materialized the final round's checkpoint, so
-        # the persisted edge frame is no longer needed
-        und.unpersist()
+        # the scope may drop the persisted edge frame on exit
     return comp
 
 
@@ -349,5 +348,4 @@ def cdlp(
             # round race to compute it lazily — measured 6× slower at
             # 10 iterations than this, the round-3 wall-time fragility.)
             labels = checkpoint(labels)
-        nbrs.unpersist()
     return labels

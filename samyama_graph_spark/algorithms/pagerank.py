@@ -130,8 +130,6 @@ def pagerank(
         )
         n = deg.count()
         if n == 0:
-            e.unpersist()
-            deg.unpersist()
             return v.withColumn("rank", F.lit(0.0))
 
         ranks = deg.withColumn("rank", F.lit(1.0 / n))
@@ -179,11 +177,8 @@ def pagerank(
             )
             s_total = (1.0 - damping) + damping * dang + damping * total_msg
 
-        # materialize the final ranks inside the loop scope (one job),
-        # then drop the loop-state persists — nothing leaks into a
-        # long-lived session
+        # materialize the final ranks inside the loop scope (one job):
+        # its exit drops the loop-state persists
         trace_plan("pagerank", ranks)
         ranks = ranks.select("id", "rank").localCheckpoint()
-        e.unpersist()
-        deg.unpersist()
     return ranks

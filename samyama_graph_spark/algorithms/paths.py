@@ -276,7 +276,6 @@ def bfs(
                 break
             visited = visited.unionByName(nxt)  # union of checkpoints
             frontier = nxt
-        e.unpersist()
     return visited if parents else visited.select("id", "depth")
 
 
@@ -378,7 +377,6 @@ def sssp(
                 eager=False,  # materialized by the NEXT round's count
             )
             frontier = improved
-        e.unpersist()
     return dist if parents else dist.select("id", "dist")
 
 

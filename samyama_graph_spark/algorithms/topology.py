@@ -33,6 +33,7 @@ from samyama_graph_spark.algorithms.util import (
     edges_pdf_if_small,
     symmetrize,
 )
+from samyama_graph_spark.scope import pin, release
 
 
 # closing-edge sets up to this many rows broadcast as the triangle
@@ -40,56 +41,11 @@ from samyama_graph_spark.algorithms.util import (
 # beyond it the closure falls back to the wedge shuffle join
 _CLOSING_BCAST_GUARD = 16_000_000
 
-# pinned frames, keyed per SparkSession (weakly — a stopped session's
-# entries vanish with it) and per scope: "closure" for pins created
-# inside closure_edges, "outer" for entry-point pins (lcc_directed's
-# ecnt/tris).  Keying per session keeps two concurrent sessions from
-# releasing each other's pins mid-plan; the scope split lets
-# closure_edges clean up after ITSELF (it is documented-public, so a
+# pin owners (samyama_graph_spark.scope): "closure" for pins made inside
+# closure_edges, "outer" for entry-point pins (lcc_directed's ecnt/tris).
+# The split lets closure_edges clean up after ITSELF (it is public, so a
 # direct caller must not accumulate cache blocks) without dropping an
-# enclosing entry point's still-live pins.
-import threading as _threading
-import weakref as _weakref
-
-_PINS: "_weakref.WeakKeyDictionary" = _weakref.WeakKeyDictionary()
-_PINS_LOCK = _threading.Lock()
-
-
-def _release_pins(session, scope: str | None = None) -> None:
-    """Unpersist pins from PREVIOUS invocations — called at the START
-    of each entry point, BEFORE any new persist (the plan-identity
-    lesson from dedup._pin_frame: persisting a plan-identical frame
-    no-ops onto the existing cache entry, so unpersisting the old
-    frame afterwards would drop the entry the new frame relies on).
-    Re-running an operator therefore re-materializes honestly instead
-    of silently serving the previous run's cache — and a long session
-    never accumulates cache blocks.  ``scope=None`` releases every
-    scope for the session (entry points); a named scope releases only
-    its own pins (closure_edges cleaning up after itself).
-
-    The unpersist MUST block: the caller immediately re-``cache()``s
-    plan-identical frames, and Spark's CacheManager keys entries on
-    the canonicalized plan — an async unpersist can land AFTER the new
-    ``cache()`` no-ops onto the still-registered old entry, dropping
-    the entry the new pin relies on (the new frame is then silently
-    uncached and every multi-leg consumer recomputes it)."""
-    with _PINS_LOCK:
-        scopes = _PINS.get(session)
-        if not scopes:
-            return
-        names = list(scopes) if scope is None else [scope]
-        drop = [f for n in names for f in scopes.pop(n, [])]
-    for f in drop:
-        f.unpersist(blocking=True)
-
-
-def _pinned(df: DataFrame, scope: str) -> DataFrame:
-    """cache() + eager materialization so later multi-leg jobs reuse it."""
-    df = df.cache()
-    df.count()
-    with _PINS_LOCK:
-        _PINS.setdefault(df.sparkSession, {}).setdefault(scope, []).append(df)
-    return df
+# enclosing entry point's still-live pins.  Entry points release both.
 
 
 def closure_edges(
@@ -126,14 +82,14 @@ def closure_edges(
     # caller of the documented-public closure_edges must not
     # accumulate cache blocks); enclosing entry points' "outer" pins
     # stay live
-    _release_pins(edges.sparkSession, "closure")
+    release(edges.sparkSession, "closure")
     if canonical:
         pairs = edges.select("src", "dst")
     else:
         pairs = symmetrize(edges).filter(F.col("src") < F.col("dst"))
-    pairs = _pinned(pairs, "closure")
+    pairs = pin(pairs, "closure")
     # undirected degree = appearances on either side of canonical pairs
-    deg = _pinned(
+    deg = pin(
         pairs.select(F.col("src").alias("id"))
         .unionAll(pairs.select(F.col("dst").alias("id")))
         .groupBy("id")
@@ -149,7 +105,7 @@ def closure_edges(
     fwd = (F.col("sdeg") < F.col("ddeg")) | (
         (F.col("sdeg") == F.col("ddeg")) & (F.col("src") < F.col("dst"))
     )
-    oriented = _pinned(
+    oriented = pin(
         pairs.join(sd, "src")
         .join(dd, "dst")
         .select(
@@ -303,7 +259,7 @@ def triangle_stats(
     ``driver_guard`` pairs the degree-oriented wedge closing runs as
     vectorized numpy on the driver; the distributed closure join is
     the ≥guard path, same orientation and counts."""
-    _release_pins(edges.sparkSession)
+    release(edges.sparkSession, "closure", "outer")
     pdf = edges_pdf_if_small(edges.select("src", "dst"), driver_guard)
     if pdf is not None:
         return _triangle_stats_driver(edges.sparkSession, pdf)
@@ -382,10 +338,10 @@ def lcc_directed(edges: DataFrame) -> DataFrame:
     no per-node neighbor array ever materializes, which is what makes
     the plan survive hub vertices at 100 TB.
     """
-    _release_pins(edges.sparkSession)
+    release(edges.sparkSession, "closure", "outer")
     dedges = edges.select("src", "dst").filter(F.col("src") != F.col("dst"))
     # directed multiplicity per undirected pair (1 or 2)
-    ecnt = _pinned(
+    ecnt = pin(
         dedges.distinct()
         .select(
             F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b")
@@ -399,7 +355,7 @@ def lcc_directed(edges: DataFrame) -> DataFrame:
         canonical=True,
     )
     # pinned: the three role projections below each consume tris
-    tris = _pinned(tris, "outer")
+    tris = pin(tris, "outer")
     legs = (
         tris.select(
             F.col("a").alias("id"), F.col("b").alias("p"), F.col("c").alias("q")

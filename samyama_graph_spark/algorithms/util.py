@@ -3,10 +3,11 @@
 from __future__ import annotations
 
 import contextlib
-from typing import Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from samyama_graph_spark.scope import own, scope
 
 # Physical-plan strings of the last iteration of each algorithm's loop,
 # keyed by algorithm name.  The loops materialize their results
@@ -60,12 +61,11 @@ def loop_partitions(df: DataFrame, floor: int = 8) -> int:
     return max(min(floor, conf_n), min(est, conf_n))
 
 
-@contextlib.contextmanager
 def iteration_scope(
     spark: SparkSession, partitions: int | DataFrame | None = None
-) -> Iterator[None]:
-    """Disable AQE (and optionally pin shuffle partitions) for the
-    duration of a fixed-point loop.
+) -> "contextlib.AbstractContextManager[None]":
+    """A :func:`~samyama_graph_spark.scope.scope` with AQE off (and,
+    optionally, shuffle partitions pinned) for a fixed-point loop.
 
     Inside an iterative algorithm the physical layout is pinned by hand
     (partitioned persisted frames + shuffle_hash hints), so adaptive
@@ -74,60 +74,33 @@ def iteration_scope(
     job, tripling the per-iteration job floor (measured 6 jobs/iter vs 1
     on PageRank).  ``partitions`` (from :func:`loop_partitions`) keeps
     EVERY shuffle in the loop on the same modulus, so persisted-frame
-    co-partitioning is never broken by a mismatched groupBy.  Scope is
-    the session: callers run loops serially.
+    co-partitioning is never broken by a mismatched groupBy.  Frames
+    from :func:`partitioned` are released on exit.
     """
-    old = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    old_sp = spark.conf.get("spark.sql.shuffle.partitions", "200")
-    frames: list[DataFrame] = []
-    _ACTIVE_SCOPES.append(frames)
-    try:
-        # everything after reading the old confs sits inside the
-        # try/finally: a failure in plan compilation (loop_partitions)
-        # or conf.set must not leak AQE-off into the resident session
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-        if isinstance(partitions, DataFrame):
-            partitions = loop_partitions(partitions)
-        if partitions is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", str(partitions))
-        yield
-    finally:
-        _ACTIVE_SCOPES.pop()
-        # unpersist every frame partitioned() registered in this scope:
-        # loops unpersist explicitly on the success path (idempotent),
-        # this guarantees an exception mid-loop cannot leak executor
-        # storage in a long-lived session
-        for df in frames:
-            try:
-                df.unpersist()
-            except Exception:
-                pass
-        spark.conf.set("spark.sql.adaptive.enabled", old)
-        spark.conf.set("spark.sql.shuffle.partitions", old_sp)
-
-
-# Stack of per-scope persisted-frame registries (innermost last).
-_ACTIVE_SCOPES: list[list[DataFrame]] = []
+    if isinstance(partitions, DataFrame):
+        partitions = loop_partitions(partitions)
+    conf = {"spark.sql.adaptive.enabled": "false"}
+    if partitions is not None:
+        conf["spark.sql.shuffle.partitions"] = str(partitions)
+    return scope(spark, conf)
 
 
 def partitioned(df: DataFrame, *keys: str) -> DataFrame:
-    """Hash-repartition on the loop join key and persist.
+    """Hash-repartition on the loop join key and persist (the loop's
+    first action materializes it); the enclosing
+    :func:`iteration_scope` releases the frame on exit.
 
     Every per-iteration join against the returned frame is then
     exchange-free on this side (hash(key, shuffle.partitions) satisfies
     the join's distribution requirement), and the blocks are read from
-    executor storage instead of re-running the source scan.  Callers
-    must unpersist after the loop's result is materialized.
+    executor storage instead of re-running the source scan.
 
     NOTE: ``localCheckpoint`` would NOT work here — it rewraps the data
     as a ``Scan ExistingRDD`` whose partitioning Catalyst forgets, so
     the co-location is silently lost and every iteration re-shuffles.
     """
     n = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "200"))
-    out = df.repartition(n, *keys).persist()
-    if _ACTIVE_SCOPES:
-        _ACTIVE_SCOPES[-1].append(out)
-    return out
+    return own(df.repartition(n, *keys).persist())
 
 
 def collect_if_small(

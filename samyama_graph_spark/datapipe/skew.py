@@ -4,8 +4,9 @@ AQE's skew-join handles most hot-key joins at runtime (enabled
 session-wide, session.py), but two situations still need explicit
 salting at 100 TB:
 
-- inside ``iteration_scope`` loops AQE is off (algorithms/util.py), so
-  a power-law hub key would pin one reducer per round;
+- inside ``iteration_scope`` loops AQE is off (a session-conf override
+  held by ``samyama_graph_spark.scope`` for the loop's duration), so a
+  power-law hub key would pin one reducer per round;
 - holistic/ordered pipelines where AQE may not split (e.g. a shuffle
   feeding a window), or where the skew is in an AGGREGATION, which
   AQE's skew logic does not touch — map-side combine fixes algebraic

@@ -31,6 +31,8 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from samyama_graph_spark.scope import scope
+
 # Reserved column names (GraphFrames conventions).
 ID = "id"
 SRC = "src"
@@ -205,9 +207,7 @@ class PropertyGraph:
         # checkpoint truly defers to the next action.  Write-delta
         # plans are tiny unions/joins — adaptive re-planning has
         # nothing to add.
-        prev = self.spark.conf.get("spark.sql.adaptive.enabled", "true")
-        try:
-            self.spark.conf.set("spark.sql.adaptive.enabled", "false")
+        with scope(self.spark, {"spark.sql.adaptive.enabled": "false"}):
             return PropertyGraph(
                 self.spark,
                 {k: c("n", k, v) for k, v in self.nodes.items()},
@@ -219,8 +219,6 @@ class PropertyGraph:
                 # after compaction)
                 dict(self.edges_rev),
             )._carry_stats_from(self)
-        finally:
-            self.spark.conf.set("spark.sql.adaptive.enabled", prev)
 
     # ---------------------------------------------------------------- scans
     def node_df(self, label: str | None = None) -> DataFrame:

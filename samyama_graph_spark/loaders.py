@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from samyama_graph_spark.graph import EdgeMeta, PropertyGraph
+from samyama_graph_spark.session import ensure_nanos_as_long
 
 TABLES = [
     "region",
@@ -67,7 +68,7 @@ def load_tables(
     cached = per.setdefault(sf_dir, {})
     missing = [n for n in wanted if n not in cached]
     if missing:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+        ensure_nanos_as_long(spark)
         for name in missing:
             path = os.path.join(sf_dir, f"{name}.parquet")
             if os.path.exists(path):

@@ -26,6 +26,8 @@ from dataclasses import dataclass
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from samyama_graph_spark.scope import own, release
+
 _SCHEMA = (
     "s string, p string, o string, o_kind string, "
     "o_datatype string, o_lang string, g string"
@@ -2085,7 +2087,8 @@ def _path_closure(
     round joins the reachable-pair set with itself, so round r covers
     paths up to 2^r hops — O(log diameter) rounds, convergence by pair
     count (cycle-safe: distinct pairs can only grow to a fixpoint).
-    Superseded rounds unpersist; the returned frame's lineage is the
+    Superseded rounds unpersist; the returned frame stays pinned until
+    the next distributed closure in the session, and its lineage is the
     recomputable union-distinct chain.
 
     Driver fast path (same pattern as the graph algorithms' edge
@@ -2124,6 +2127,8 @@ def _path_closure(
             )
         # closure too dense for the driver: fall through to the
         # distributed doubling loop below
+    # released before this call persists anything (samyama_graph_spark.scope)
+    release(rel.sparkSession, "rdf_closure")
     paths = base.distinct().persist()
     n = paths.count()
     for _ in range(max_rounds):
@@ -2139,6 +2144,6 @@ def _path_closure(
             break
         paths.unpersist()
         paths, n = nxt, m
-    return paths
+    return own(paths, "rdf_closure")
 
 

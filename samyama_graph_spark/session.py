@@ -88,6 +88,12 @@ def ensure_checkpoint_dir(spark: SparkSession) -> str:
     return d
 
 
+def ensure_nanos_as_long(spark: SparkSession) -> None:
+    """Read parquet TIMESTAMP(NANOS) as long nanos, which Spark rejects
+    by default; set for good, as a vanilla session must load it too."""
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+
+
 def ensure_shipped(spark: SparkSession) -> None:
     """Ship this package to executor Python workers via addPyFile.
 

@@ -16,6 +16,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from samyama_graph_spark.scope import scope
+from samyama_graph_spark.session import ensure_nanos_as_long, ensure_shipped
+
 EVENTS_SCHEMA = T.StructType(
     [
         # ts as nanos-long is the DEFAULT (parquet TIMESTAMP(NANOS)
@@ -43,7 +46,7 @@ def events_stream(
     """
     from pyspark.errors import AnalysisException
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    ensure_nanos_as_long(spark)
     try:
         probed = spark.read.parquet(sf_dir).schema
         ts_type = next(
@@ -181,8 +184,6 @@ def stateful_running_totals(events: DataFrame, timeout_ms: int = 0) -> DataFrame
             {"user_id": [key[0]], "n_events": [n], "total_value": [round(total, 4)]}
         )
 
-    from samyama_graph_spark.session import ensure_shipped
-
     ensure_shipped(events.sparkSession)
     return events.groupBy("user_id").applyInPandasWithState(
         update,
@@ -193,29 +194,13 @@ def stateful_running_totals(events: DataFrame, timeout_ms: int = 0) -> DataFrame
     )
 
 
-class _scoped_shuffle_partitions:
-    """Temporarily pin ``spark.sql.shuffle.partitions`` while streaming
-    queries are PLANNED (the stateful-operator partition count is fixed
-    at plan time).  Stateful streaming cost scales with the state-store
-    partition count — every micro-batch touches (snapshot + delta +
-    commit) files per partition — so partitions should be sized to the
-    STATE volume, not to the session's batch-join parallelism.  On a
-    real cluster the same knob is sized to keep per-partition state in
-    the low-GB range; the scope restores the batch setting on exit."""
-
-    def __init__(self, spark: SparkSession, n: int | None):
-        self.spark, self.n = spark, n
-
-    def __enter__(self):
-        if self.n is not None:
-            self.prev = self.spark.conf.get("spark.sql.shuffle.partitions")
-            self.spark.conf.set("spark.sql.shuffle.partitions", str(self.n))
-        return self
-
-    def __exit__(self, *exc):
-        if self.n is not None:
-            self.spark.conf.set("spark.sql.shuffle.partitions", self.prev)
-        return False
+def _state_partitions(n: int | None) -> dict[str, str]:
+    """Scope conf holding shuffle partitions at ``n`` (if given) while
+    streaming queries are PLANNED, which fixes the stateful-operator
+    partition count.  Each micro-batch touches state-store files per
+    partition, so size ``n`` to the STATE volume (low-GB partitions on
+    a cluster), not to the session's batch-join parallelism."""
+    return {} if n is None else {"spark.sql.shuffle.partitions": str(n)}
 
 
 def _unload_idle_state_stores(spark: SparkSession) -> None:
@@ -251,7 +236,7 @@ def run_stream_to_memory(
     # hold the scope through awaitTermination: micro-batches plan
     # asynchronously after start(), so the conf must stay pinned until
     # the availableNow run has fully drained
-    with _scoped_shuffle_partitions(spark, shuffle_partitions):
+    with scope(spark, _state_partitions(shuffle_partitions)):
         q = (
             stream_df.writeStream.format("memory")
             .queryName(query_name)
@@ -283,7 +268,7 @@ def run_streams_to_memory(
     spark = jobs[0][0].sparkSession
     # conf stays pinned until every availableNow run has drained (the
     # micro-batches plan asynchronously after start())
-    with _scoped_shuffle_partitions(spark, shuffle_partitions):
+    with scope(spark, _state_partitions(shuffle_partitions)):
         try:
             for df, name, mode in jobs:
                 qs.append(
@@ -421,7 +406,7 @@ def run_windowed_sinks_fused(
             ):
                 pass
 
-    with _scoped_shuffle_partitions(spark, shuffle_partitions):
+    with scope(spark, _state_partitions(shuffle_partitions)):
         q = (
             stream.writeStream.foreachBatch(_process)
             .option(

@@ -163,7 +163,11 @@ class TenantCatalog:
             # does not resurrect on the next load, then swap
             for f in os.listdir(base):
                 if f.startswith(("nodes_", "edges_")):
-                    shutil.rmtree(os.path.join(base, f), ignore_errors=True)
+                    stale = os.path.join(base, f)
+                    if os.path.isdir(stale):
+                        shutil.rmtree(stale)
+                    else:
+                        os.remove(stale)
             for name, _ in tables:
                 os.replace(
                     os.path.join(staging, name), os.path.join(base, name)

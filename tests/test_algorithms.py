@@ -360,6 +360,114 @@ def test_iteration_scope_cleans_up_on_exception(spark):
     assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
 
 
+def test_iteration_scopes_interleaved_across_threads(spark):
+    """Two threads' loop scopes that overlap and exit in entry order:
+    each exit withdraws only its own conf overrides and releases only
+    its own thread's partitioned frames, and the session ends with the
+    confs it started with."""
+    import threading
+    from concurrent.futures import ThreadPoolExecutor
+
+    from samyama_graph_spark.algorithms.util import (
+        iteration_scope,
+        partitioned,
+    )
+
+    keys = ("spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions")
+    before = {k: spark.conf.get(k) for k in keys}
+    done = [threading.Event() for _ in range(5)]
+    frames, seen = {}, {}
+
+    def wait(i):
+        assert done[i].wait(60), f"step {i} never happened"
+
+    def edges(n):
+        return spark.range(n).select(
+            F.col("id").alias("src"), (F.col("id") + 1).alias("dst")
+        )
+
+    def thread_a():
+        with iteration_scope(spark, 3):
+            done[0].set()
+            wait(1)
+            frames["a"] = partitioned(edges(50), "src")
+            done[2].set()
+            wait(3)
+        done[4].set()
+
+    def thread_b():
+        wait(0)
+        with iteration_scope(spark, 5):
+            done[1].set()
+            wait(2)
+            frames["b"] = partitioned(edges(60), "src")
+            done[3].set()
+            wait(4)
+            seen["conf"] = tuple(spark.conf.get(k) for k in keys)
+            seen["a"] = frames["a"].storageLevel
+            seen["b"] = frames["b"].storageLevel
+
+    with ThreadPoolExecutor(max_workers=2) as pool:
+        for fut in [pool.submit(thread_a), pool.submit(thread_b)]:
+            fut.result(timeout=300)
+    # after A's exit, B's overrides are live and A's frame is released
+    assert seen["conf"] == ("false", "5")
+    assert not (seen["a"].useMemory or seen["a"].useDisk), seen["a"]
+    assert seen["b"].useMemory or seen["b"].useDisk, seen["b"]
+    # after B's exit, B's frame is released and the session is restored
+    lvl = frames["b"].storageLevel
+    assert not (lvl.useMemory or lvl.useDisk), lvl
+    assert {k: spark.conf.get(k) for k in keys} == before
+
+
+def test_scope_nested_restores_outer_value(spark):
+    """Same thread, nested scopes: the inner exit restores the outer
+    override and releases only the inner frame; the outer exit restores
+    the session, unsetting a key that was unset before."""
+    from samyama_graph_spark.scope import pin, scope
+
+    sp, unset = "spark.sql.shuffle.partitions", "spark.sql.files.maxRecordsPerFile"
+    assert unset not in spark.conf.getAll
+    before = spark.conf.get(sp)
+    with scope(spark, {sp: "3", unset: "7"}):
+        outer = pin(spark.range(30))
+        with scope(spark, {sp: "5"}):
+            inner = pin(spark.range(40))
+            assert spark.conf.get(sp) == "5"
+        assert spark.conf.get(sp) == "3"
+        assert spark.conf.get(unset) == "7"
+        assert not inner.storageLevel.useMemory
+        assert outer.storageLevel.useMemory
+    assert spark.conf.get(sp) == before
+    assert unset not in spark.conf.getAll
+    assert not outer.storageLevel.useMemory
+
+
+def test_session_conf_set_only_in_session_and_scope():
+    """Session-conf changes go through samyama_graph_spark.scope (or,
+    when permanent, session.py), and the per-module pin registries and
+    conf toggles it replaced stay gone."""
+    import pathlib
+    import re
+
+    import samyama_graph_spark
+
+    root = pathlib.Path(samyama_graph_spark.__file__).parent
+    old = re.compile(
+        r"_PINNED_SIGS|_PINS\b|_ACTIVE_SCOPES|_scoped_shuffle_partitions"
+    )
+    conf_set, old_names = [], []
+    for path in sorted(root.rglob("*.py")):
+        rel = path.relative_to(root).as_posix()
+        for n, line in enumerate(path.read_text().splitlines(), 1):
+            if "conf.set(" in line and rel not in ("session.py", "scope.py"):
+                conf_set.append(f"{rel}:{n}")
+            if old.search(line):
+                old_names.append(f"{rel}:{n}")
+    assert conf_set == []
+    assert old_names == []
+
+
 def _random_digraph(spark, seed, n=40, m=120, self_loops=True, weights=False):
     import random
 
@@ -664,6 +772,7 @@ def test_closure_edges_releases_own_pins(spark):
     the ContextCleaner may asynchronously reclaim OTHER tests'
     lineage-truncation blocks between baseline and check (observed as
     a spurious off-by-two in full-suite runs only)."""
+    from samyama_graph_spark import scope
     from samyama_graph_spark.algorithms import topology
 
     def rdd_ids() -> set:
@@ -683,7 +792,7 @@ def test_closure_edges_releases_own_pins(spark):
     new_ids = rdd_ids() - base_ids
     assert len(new_ids) <= 3, sorted(new_ids)
     # the per-session registry holds only the live call's pins...
-    pins = topology._PINS.get(spark, {}).get("closure", [])
+    pins = scope._REGISTRY[spark].pins.get("closure", [])
     assert len(pins) == 3
     # ...and each is actually cached: a pin whose CacheManager entry
     # was dropped (the r11 async-release race) reports StorageLevel

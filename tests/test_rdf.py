@@ -1015,6 +1015,27 @@ def test_path_closure_driver_and_distributed_agree(spark):
     assert fast == slow and len(fast) > len(pairs)
 
 
+def test_path_closure_distributed_releases_previous_result(spark):
+    """The distributed closure's persisted result is released by the
+    next call: three calls over different relations leave at most one
+    generation cached."""
+    from samyama_graph_spark.rdf import _path_closure
+
+    def rdd_ids() -> set:
+        m = spark.sparkContext._jsc.getPersistentRDDs()
+        return {int(k) for k in m.keySet().toArray()}
+
+    base_ids = rdd_ids()
+    for c in range(3):
+        rel = spark.createDataFrame(
+            [(f"c{c}n{i}", f"c{c}n{i + 1}") for i in range(6)],
+            "__ps string, __po string",
+        )
+        assert _path_closure(rel, driver_guard=0).count() == 21
+    new_ids = rdd_ids() - base_ids
+    assert len(new_ids) <= 1, sorted(new_ids)
+
+
 def test_path_closure_vec_kernel_and_budget_fallback(spark):
     """The vectorized multi-source-BFS closure kernel (r8 advice:
     replaced the dict BFS with the numpy CSR family): chain + cycle +

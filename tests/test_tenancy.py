@@ -130,6 +130,41 @@ def test_save_after_load_and_modify(spark, tmp_path):
     assert residue == []
 
 
+def test_save_over_single_file_tables(spark, tmp_path):
+    """save() over a prefix whose tables are single parquet FILES (as
+    non-Spark writers produce) must replace them, and must remove a
+    stale label's file so it does not resurrect on the next load."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    root = tmp_path / "warehouse"
+    base = root / "acme"
+    base.mkdir(parents=True)
+    pq.write_table(
+        pa.table({"id": [0, 1], "name": ["old-a", "old-b"]}),
+        base / "nodes_Person.parquet",
+    )
+    pq.write_table(
+        pa.table({"id": [5], "name": ["stale"]}), base / "nodes_Stale.parquet"
+    )
+    cat = TenantCatalog(spark, root=str(root))
+    assert sorted(cat.graph("acme").nodes) == ["Person", "Stale"]
+    cat.engine("acme").graph = _graph(spark, ["a", "b", "c"])
+    cat.save("acme")
+
+    assert sorted(os.listdir(base)) == [
+        "edges_KNOWS.parquet", "nodes_Person.parquet"
+    ]
+    fresh = TenantCatalog(spark, root=str(root))
+    assert sorted(fresh.graph("acme").nodes) == ["Person"]
+    got = fresh.query(
+        "acme", "MATCH (n:Person) RETURN n.name AS name ORDER BY name"
+    ).collect()
+    assert [r["name"] for r in got] == ["a", "b", "c"]
+
+
 def test_prefixed_views(spark):
     cat = TenantCatalog(spark)
     cat.create_tenant("t1", _graph(spark, ["a"]))
